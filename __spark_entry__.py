@@ -658,9 +658,10 @@ def _q_head_topk(spark, sf):
 
 
 def _q_seen_filter(spark, sf):
-    """Bloom-prefiltered + exact-resolved URL-seen filter — ORACLE-CHECKED:
-    the bloom is a bypass optimization; the result must equal the plain
-    anti-join complement (seq % 3 != 0 here)."""
+    """URL-seen filter (bloom + sorted-shard exact index in one pandas
+    UDF) — ORACLE-CHECKED: bloom and index are lookup structures; the
+    result must equal the plain anti-join complement (seq % 3 != 0
+    here)."""
     from post_processor_spark import seen as seen_mod
     cands = frontier.canonicalize_candidates(
         _frontier_seed_docs(spark, sf)
@@ -672,30 +673,6 @@ def _q_seen_filter(spark, sf):
     )
     return (
         seen_mod.filter_unseen(cands, seen_tbl, use_bloom=True)
-        .select("url")
-        .orderBy("url")
-    )
-
-
-def _q_seen_filter_prebuilt(spark, sf):
-    """U4 via the incrementally-maintained sorted-shard exact index
-    (seen.build_exact_index → one narrow pandas-UDF membership pass, the
-    v4 bench default) — ORACLE-CHECKED against the same plain anti-join
-    complement as q_seen_filter: bloom and index are lookup-structure
-    optimizations and must be invisible in the result."""
-    from post_processor_spark import seen as seen_mod
-    cands = frontier.canonicalize_candidates(
-        _frontier_seed_docs(spark, sf)
-        .withColumn("generation", F.lit(0))
-        .withColumn("sub", F.lit(0).cast("long"))
-    )
-    seen_tbl = cands.filter(F.col("seq") % 3 == 0).select(
-        "url_hash", "host_hash", F.lit(0).alias("generation")
-    )
-    return (
-        seen_mod.filter_unseen(
-            cands, seen_tbl, use_bloom=True, exact_join="prebuilt"
-        )
         .select("url")
         .orderBy("url")
     )
@@ -2032,7 +2009,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_adaptive_quality": _q_adaptive_quality,
         "q_record_dedup_desc": _q_record_dedup_desc,
         "q_scope_gate": _q_scope_gate,
-        "q_seen_filter_prebuilt": _q_seen_filter_prebuilt,
         "q_robots_allow": _q_robots_allow,
         "q_contamination_report": _q_contamination_report,
         "q_sitemap_scan": _q_sitemap_scan,
@@ -2709,12 +2685,6 @@ def oracle_sql() -> dict[str, str]:
             ) WHERE rn <= 12 ORDER BY url
         """,
         "q_seen_filter": """
-            SELECT 'https://host'
-                     || CAST(CASE WHEN doc_id % 10 < 3 THEN 0 ELSE doc_id % 97 END AS VARCHAR)
-                     || '.example.com/doc/' || CAST(doc_id AS VARCHAR) AS url
-            FROM documents WHERE doc_id % 3 <> 0 ORDER BY url
-        """,
-        "q_seen_filter_prebuilt": """
             SELECT 'https://host'
                      || CAST(CASE WHEN doc_id % 10 < 3 THEN 0 ELSE doc_id % 97 END AS VARCHAR)
                      || '.example.com/doc/' || CAST(doc_id AS VARCHAR) AS url

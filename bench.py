@@ -126,30 +126,26 @@ def build_frontier_state(spark, n_urls: int) -> dict:
     )
     bloom_df = seen_mod.build_bloom(seen_tbl).persist()
     bloom_df.count()  # force state build (bitmaps stay executor-side)
-    exact_join = os.environ.get("BENCH_EXACT_JOIN", "prebuilt")
-    exact_idx = None
-    if exact_join == "prebuilt":
-        exact_idx = seen_mod.build_exact_index(seen_tbl).persist()
-        exact_idx.count()
+    exact_idx = seen_mod.build_exact_index(seen_tbl).persist()
+    exact_idx.count()
     seen_tbl.count()
     return {
         "n_urls": n_urls, "n_hosts": n_hosts, "seen_tbl": seen_tbl,
-        "bloom_df": bloom_df, "exact_idx": exact_idx, "exact_join": exact_join,
+        "bloom_df": bloom_df, "exact_idx": exact_idx,
     }
 
 
 def release_frontier_state(state: dict) -> None:
     state["seen_tbl"].unpersist()
     state["bloom_df"].unpersist()
-    if state["exact_idx"] is not None:
-        state["exact_idx"].unpersist()
+    state["exact_idx"].unpersist()
 
 
 def frontier_throughput(spark, n_urls: int, state: dict | None = None) -> tuple[float, int]:
     """Scheduled URLs/sec for one full scheduling pass at n_urls seeds.
 
     Measured composition = frontier.schedule_seed_list: canonicalize →
-    bloom tag + null-key broadcast exact anti-join (all narrow) →
+    bloom + exact-index seen filter in one pandas UDF (all narrow) →
     politeness with fused in-exchange dedupe. The seed payload crosses
     ONE exchange; the earlier standalone-dedupe pipeline paid an extra
     full url_hash exchange plus two SortAggregate sorts for the same
@@ -162,9 +158,8 @@ def frontier_throughput(spark, n_urls: int, state: dict | None = None) -> tuple[
     raw URLs, so timing that reconstruction would measure one-time state
     build, not scheduling throughput. What stays inside the timed
     region is everything a pass actually pays: the 8 MB bitmap and
-    ~32 MB exact-index collect+broadcast (or, under the join
-    strategies, the exact-side broadcast/shuffle), canonicalize,
-    in-batch dedupe, seen filter, and the politeness top-B."""
+    ~32 MB exact-index collect+broadcast, canonicalize, in-batch
+    dedupe, seen filter, and the politeness top-B."""
     from pyspark.sql import functions as F
 
     from post_processor_spark import fixtures, frontier
@@ -173,10 +168,9 @@ def frontier_throughput(spark, n_urls: int, state: dict | None = None) -> tuple[
     # at 30% of traffic so the salted two-phase top-B is actually exercised
     # seen side (20% of the hash space pre-seen): independent narrow
     # lineage, matching the generation loop where `seen` is its own store
-    # table. Duplicate urls are harmless on a bloom-build / left_anti
-    # build side, so this lineage needs no dedupe shuffle; the narrow
-    # projection is persisted because the bloom build and the exact
-    # anti-join both consume it.
+    # table. Duplicate urls are harmless to the bloom and exact-index
+    # builds, so this lineage needs no dedupe shuffle; the narrow
+    # projection is persisted because both builds consume it.
     # The exact membership index is sorted int64 shards, the same kind of
     # incrementally-maintained state as the bloom (per-generation deltas
     # via merge_exact_index) — the pass pays its collect+broadcast
@@ -196,8 +190,7 @@ def frontier_throughput(spark, n_urls: int, state: dict | None = None) -> tuple[
     t0 = time.time()
     scheduled = frontier.schedule_seed_list(
         seeds, state["seen_tbl"], generation=1, budget_per_host=64,
-        salt_parts=64, bloom=state["bloom_df"],
-        exact_join=state["exact_join"], exact_index=state["exact_idx"],
+        salt_parts=64, bloom=state["bloom_df"], exact_index=state["exact_idx"],
     ).filter(F.col("status") == "scheduled")
     n_scheduled = scheduled.count()
     dt = time.time() - t0
@@ -260,7 +253,7 @@ def crawl_e2e(spark, n_docs: int = CRAWL_DOCS,
         stats = frontier.run_generations(
             spark, store, docs, seeds, n_generations=n_generations,
             budget_per_host=8, compact_every=4, robots=robots,
-            trap_gate=True, exact_join="prebuilt",
+            trap_gate=True,
         )
         dt = time.time() - t0
     finally:

@@ -477,38 +477,30 @@ def schedule_seed_list(
     salt_parts: int = 16,
     bloom: DataFrame | None = None,
     skew_threshold: int | None = None,
-    exact_join: str = "broadcast_fused",
     exact_index: DataFrame | None = None,
 ) -> DataFrame:
     """One-exchange scheduling of a fresh seed list against an existing
     seen set — the bench-headline composition, and the fast path for
     'here are N new URLs, schedule the polite top-B per host':
 
-      canonicalize (narrow) → bloom tag + null-key broadcast exact
-      anti-join (narrow) → politeness with FUSED dedupe (dedupe + rank
+      canonicalize (narrow) → bloom + exact-index seen filter in one
+      pandas UDF (narrow) → politeness with FUSED dedupe (dedupe + rank
       windows share one host-partitioned exchange per skew branch).
 
-    The seed payload crosses exactly ONE exchange. The default
-    exact_join='broadcast_fused' requires the seen side to fit a
-    broadcast; 'shuffle_hash' resolves the maybe-seen subset with a
-    parallel shuffle-hash anti-join instead (no serial broadcast build —
-    see seen.filter_unseen); 'prebuilt' takes the incrementally
-    maintained sorted-shard exact index (seen.build_exact_index) and
-    resolves bloom + exact membership in one narrow pandas UDF — no
-    join operator, no per-pass hash-relation build; at a 10^10-row seen
-    set use the generation loop's branch path + bucketed layout instead. Result rows are
-    persisted (the politeness census + both skew branches consume them);
-    callers own unpersist/clearCache."""
-    from .seen import filter_unseen as _filter_unseen
-
+    The seed payload crosses exactly ONE exchange. bloom / exact_index
+    are the seen set's maintained lookup tables (seen.merge_bloom /
+    seen.merge_exact_index); each one not passed is built from `seen`.
+    Both must fit in one broadcast together (seen.filter_unseen): the
+    bitmaps plus 8 bytes per seen key. Result rows are persisted (the
+    politeness census + both skew branches consume them); callers own
+    unpersist/clearCache."""
     # delta-encode BEFORE the persist: the cached unseen frame then
     # carries null url/host for the common case instead of three full
     # string columns per row (the cache build was the largest remaining
     # per-row byte cost of this pass; politeness re-encodes idempotently)
     cand = _slim_encode(seed_candidates(seeds))
-    unseen = _filter_unseen(
-        cand, seen, use_bloom=True, bloom=bloom, exact_join=exact_join,
-        exact_index=exact_index,
+    unseen = filter_unseen(
+        cand, seen, use_bloom=True, bloom=bloom, exact_index=exact_index,
     ).persist()
     return politeness_schedule(
         unseen,
@@ -577,6 +569,62 @@ def pending_view(
     )
 
 
+def _read_seen_state(spark: SparkSession, store: SnapshotStore) -> tuple:
+    """(seen, bloom deltas, exact-index deltas) of the store. A lookup
+    table the store does not have yet reads as None; _seen_state_writes
+    backfills it."""
+
+    def optional(table: str) -> DataFrame | None:
+        try:
+            return store.read(spark, table)
+        except FileNotFoundError:
+            return None
+
+    return store.read(spark, "seen"), optional("bloom"), optional("exact_index")
+
+
+def _seen_state_writes(
+    rows: DataFrame,
+    generation: int,
+    seen_mode: str,
+    prior: tuple | None = None,
+    compact: bool = False,
+) -> list:
+    """write_many entries that add the keys of `rows` (url_hash,
+    host_hash) to the seen set AND to its two lookup tables, the bloom
+    and the exact index. Every writer of seen state goes through here so
+    the three tables never disagree: a key in seen but missing from the
+    index would pass the bloom as maybe-seen, miss the index and be
+    rediscovered as new.
+
+    Each lookup delta is built from only the new keys (cost ∝ new rows,
+    never a rescan of seen). prior: _read_seen_state before this write,
+    None for a fresh store. A lookup table missing from an existing
+    store (written before the table was kept) gets a one-time backfill
+    over seen ∪ new keys. compact=True folds the prior deltas into one
+    (the generation loop's compaction)."""
+    seen, bloom_deltas, idx_deltas = prior or (None, None, None)
+    new_keys = rows.select("url_hash")
+    writes = [(
+        "seen",
+        rows.select("url_hash", "host_hash", F.lit(generation).alias("generation")),
+        generation,
+        seen_mode,
+    )]
+    for table, build, merge, deltas in (
+        ("bloom", build_bloom, merge_bloom, bloom_deltas),
+        ("exact_index", build_exact_index, merge_exact_index, idx_deltas),
+    ):
+        if deltas is None and seen is not None:
+            delta = build(seen.select("url_hash").unionByName(new_keys))
+        else:
+            delta = build(new_keys)
+        if compact and deltas is not None:
+            delta = merge(deltas.unionByName(delta))
+        writes.append((table, delta, generation, "compact" if compact else "append"))
+    return writes
+
+
 def run_generation(
     spark: SparkSession,
     store: SnapshotStore,
@@ -589,7 +637,7 @@ def run_generation(
     compact_every: int = 8,
     robots: DataFrame | None = None,
     head_cache: bool = True,
-    exact_join: str = "branch",
+    exact_join: str = "prebuilt",
     trap_gate: bool = False,
 ) -> dict:
     """One frontier generation: robots gate → schedule → fetch(sim) →
@@ -631,35 +679,31 @@ def run_generation(
     scans the full delta log). Disabled when compact_every=0. With the
     head active, the rows_in metric counts the scheduler's input rows
     (head size), not the full pending set — counting 10^10 pending rows
-    per generation would defeat the point."""
+    per generation would defeat the point.
+
+    use_bloom: True resolves discovered URLs against the store's bloom +
+    exact index (seen.filter_unseen — both must fit one broadcast);
+    False uses the plain anti-join on the seen table. Either way the
+    commit keeps seen, bloom and index in step. exact_join accepts only
+    'prebuilt', the one seen filter."""
+    if exact_join != "prebuilt":
+        raise ValueError(
+            f"exact_join must be 'prebuilt' (the only seen filter), got {exact_join!r}"
+        )
     t0 = time.time()
     frontier = store.read(spark, "frontier").select(*FRONTIER_COLS)
-    seen = store.read(spark, "seen")
-    # Incrementally maintained bloom table: per-generation delta bitmaps,
-    # OR-merged at read (tiny — n_buckets rows per delta). This replaces
-    # the per-generation build_bloom(seen) rescan, whose cost is
-    # O(|seen|): at a 10^10-row seen set that rescan IS the job.
-    try:
-        bloom_deltas = store.read(spark, "bloom")
-    except FileNotFoundError:
-        bloom_deltas = None  # pre-bloom store (older run) — backfill below
-    bloom_df = (
-        merge_bloom(bloom_deltas) if (use_bloom and bloom_deltas is not None) else None
-    )
-    # exact_join='prebuilt': the exact seen side is ALSO an incrementally
-    # maintained delta log — sorted int64 shards per bucket, union-merged
-    # at read, appended per generation (cost ∝ new keys). A store without
-    # the table (branch-path history, or bootstrap) gets a one-time
-    # backfill over seen∪new at commit; this generation's filter then
-    # builds from the seen table directly (same one-time O(|seen|) cost
-    # the bloom backfill pays).
-    idx_deltas = None
-    exact_idx_df = None
-    if exact_join == "prebuilt":
-        try:
-            idx_deltas = store.read(spark, "exact_index")
-        except FileNotFoundError:
-            idx_deltas = None
+    # seen state = the seen table plus its bloom and exact-index delta
+    # logs, merged at read (tiny — n_buckets rows per delta) and appended
+    # per generation, so no generation rescans the full seen table: at a
+    # 10^10-row seen set that rescan IS the job. A store without a lookup
+    # table gets a one-time backfill at commit; this generation's filter
+    # then builds that table from seen directly.
+    seen_state = _read_seen_state(spark, store)
+    seen, bloom_deltas, idx_deltas = seen_state
+    bloom_df = exact_idx_df = None
+    if use_bloom:
+        if bloom_deltas is not None:
+            bloom_df = merge_bloom(bloom_deltas)
         if idx_deltas is not None:
             exact_idx_df = merge_exact_index(idx_deltas)
 
@@ -824,7 +868,7 @@ def run_generation(
     )
     new_base = filter_unseen(
         discovered, seen, use_bloom=use_bloom, materialize=True, bloom=bloom_df,
-        exact_join=exact_join, exact_index=exact_idx_df,
+        exact_index=exact_idx_df,
     )
     new_rows = new_base.select(*FRONTIER_COLS)
     n_new = new_base.materialized_count
@@ -919,23 +963,13 @@ def run_generation(
         .otherwise(F.lit(0)).cast("long").alias("filtered_seen"),
         F.lit(wall_ms).cast("long").alias("wall_ms"),
     )
-    # ONE atomic commit for all three tables: a crash mid-generation must
-    # never leave the frontier at g with the seen set at g-1. All three
-    # are append-mode — only this generation's delta is written (a full
-    # rewrite is O(10^10) I/O per generation at target scale). Every
-    # compact_every generations the frontier delta log is folded into one
-    # merged dir instead (still the same atomic commit).
-    delta = finished.select(*FRONTIER_COLS).unionByName(new_rows)
-    if blocked is not None:
-        delta = delta.unionByName(blocked)
-    # bloom delta: bitmaps over THIS generation's new keys only (cost ∝
-    # new rows). A pre-bloom store gets a one-time backfill over seen∪new.
-    new_keys = new_rows.select("url_hash")
-    if bloom_deltas is None:
-        bloom_delta = build_bloom(seen.select("url_hash").unionByName(new_keys))
-    else:
-        bloom_delta = build_bloom(new_keys)
-    if compact_every and generation % compact_every == 0:
+    # ONE atomic commit for every table: a crash mid-generation must
+    # never leave the frontier at g with the seen set at g-1. Only this
+    # generation's deltas are written (a full rewrite is O(10^10) I/O
+    # per generation at target scale). Every compact_every generations
+    # the frontier, bloom and exact-index delta logs are folded into one
+    # merged dir each instead (still the same atomic commit).
+    if is_compact:
         merged = (
             frontier.filter(F.col("status") != "pending")
             .unionByName(finished.select(*FRONTIER_COLS))
@@ -947,44 +981,22 @@ def run_generation(
         if blocked is not None:
             merged = merged.unionByName(blocked)
         frontier_entry = ("frontier", merged, generation, "compact")
-        if bloom_deltas is not None:
-            bloom_delta = merge_bloom(bloom_deltas.unionByName(bloom_delta))
-        bloom_entry = ("bloom", bloom_delta, generation, "compact")
     else:
+        delta = finished.select(*FRONTIER_COLS).unionByName(new_rows)
+        if blocked is not None:
+            delta = delta.unionByName(blocked)
         frontier_entry = ("frontier", delta, generation, "append")
-        bloom_entry = ("bloom", bloom_delta, generation, "append")
-    idx_entry = None
-    if exact_join == "prebuilt":
-        if idx_deltas is None:
-            idx_delta = build_exact_index(
-                seen.select("url_hash").unionByName(new_keys)
-            )
-        else:
-            idx_delta = build_exact_index(new_keys)
-        if compact_every and generation % compact_every == 0:
-            if idx_deltas is not None:
-                idx_delta = merge_exact_index(idx_deltas.unionByName(idx_delta))
-            idx_entry = ("exact_index", idx_delta, generation, "compact")
-        else:
-            idx_entry = ("exact_index", idx_delta, generation, "append")
-    # seen deltas follow the layout bootstrap chose (append dirs or the
-    # bucketed external table — spec already pinned in the manifest)
-    seen_mode = store.table_mode("seen") or "append"
     writes = [
         frontier_entry,
-        (
-            "seen",
-            new_rows.select(
-                "url_hash", "host_hash", F.lit(generation).alias("generation")
-            ),
-            generation,
-            seen_mode,
-        ),
         ("metrics", metrics, generation, "append"),
-        bloom_entry,
+        # seen deltas follow the layout bootstrap chose (append dirs or
+        # the bucketed external table — spec already pinned in the
+        # manifest)
+        *_seen_state_writes(
+            new_rows, generation, store.table_mode("seen"), seen_state,
+            compact=is_compact,
+        ),
     ]
-    if idx_entry is not None:
-        writes.append(idx_entry)
     if use_head:
         # head' = top-K·B per host of (this generation's unscheduled
         # input ∪ new discoveries). On a head generation the input was
@@ -1030,26 +1042,24 @@ def bootstrap(
 ) -> dict:
     """Generation 0: seed the frontier + seen set.
 
+    Writes the seed rows to the frontier and, through
+    _seen_state_writes, to the seen set, its bloom and its exact index.
+
     seen_layout='bucketed' stores the seen set as a url_hash-bucketed
-    external table (state.SnapshotStore bucketed mode): every later
-    generation's exact anti-join then scans the 10^10-row seen side IN
-    PLACE — no per-generation shuffle of the seen set, only the small
-    maybe-seen side is exchanged into the bucket partitioning. At cluster
-    scale pick seen_buckets ~ total cores (e.g. 4096); the Iceberg analog
-    is a bucket(N, url_hash) partition transform + storage-partitioned
-    joins."""
+    external table (state.SnapshotStore bucketed mode): a plain anti-join
+    on seen (run_generation with use_bloom=False) then scans the
+    10^10-row seen side IN PLACE — no per-generation shuffle of the seen
+    set, only the candidate side is exchanged into the bucket
+    partitioning. At cluster scale pick seen_buckets ~ total cores (e.g.
+    4096); the Iceberg analog is a bucket(N, url_hash) partition
+    transform + storage-partitioned joins."""
     if seen_layout not in ("append", "bucketed"):
         # the layout is pinned forever in the manifest — a typo silently
         # coerced to 'append' would only surface as a scale regression
         raise ValueError(f"seen_layout must be 'append' or 'bucketed', got {seen_layout!r}")
     fr = seeds_to_frontier(seeds).select(*FRONTIER_COLS).persist()
-    seen_mode = "bucketed" if seen_layout == "bucketed" else "append"
     store.write_many(
-        [
-            ("frontier", fr, 0, "append"),
-            ("seen", fr.select("url_hash", "host_hash", F.lit(0).alias("generation")), 0, seen_mode),
-            ("bloom", build_bloom(fr.select("url_hash")), 0, "append"),
-        ],
+        [("frontier", fr, 0, "append"), *_seen_state_writes(fr, 0, seen_layout)],
         bucket_specs={"seen": (["url_hash"], seen_buckets)},
     )
     n = fr.count()

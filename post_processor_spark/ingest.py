@@ -214,3 +214,29 @@ def dedupe_by_url(docs_meta: DataFrame) -> DataFrame:
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
+
+
+def build_tables(
+    domain_raw: DataFrame | None = None, twitter_raw: DataFrame | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """Raw crawler rows of either source (each needs url and seq) →
+    (documents, docs_meta).
+
+    Re-crawled URLs are dropped from the RAW rows, before both builders,
+    as the reference loader does (load_input.py:294): documents are keyed
+    by uuid5(url), so deduping docs_meta alone would keep every copy's
+    spans under one doc_id and report its citations once per copy."""
+    parts = []
+    if domain_raw is not None:
+        raw = dedupe_by_url(domain_raw)
+        parts.append((domain_docs_to_documents(raw), domain_docs_meta(raw)))
+    if twitter_raw is not None:
+        raw = dedupe_by_url(twitter_raw)
+        parts.append((twitter_docs_to_documents(raw), twitter_docs_meta(raw)))
+    if not parts:
+        raise ValueError("build_tables needs domain_raw or twitter_raw")
+    documents, meta = parts[0]
+    for d, m in parts[1:]:
+        documents = documents.unionByName(d)
+        meta = meta.unionByName(m)
+    return documents, meta

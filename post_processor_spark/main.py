@@ -60,8 +60,6 @@ def cmd_crawl(args) -> None:
 
 
 def cmd_analyze(args) -> None:
-    from pyspark.sql import functions as F
-
     from post_processor_spark import citations, fixtures, ingest, sources
 
     if not args.golden and not args.data:
@@ -69,13 +67,8 @@ def cmd_analyze(args) -> None:
         sys.exit(2)
     spark = _spark(args)
     if args.golden:
-        dom_raw = fixtures.golden_domain_raw(spark)
-        twi_raw = fixtures.golden_twitter_raw(spark)
-        documents = ingest.domain_docs_to_documents(dom_raw).unionByName(
-            ingest.twitter_docs_to_documents(twi_raw)
-        )
-        meta = ingest.dedupe_by_url(
-            ingest.domain_docs_meta(dom_raw).unionByName(ingest.twitter_docs_meta(twi_raw))
+        documents, meta = ingest.build_tables(
+            fixtures.golden_domain_raw(spark), fixtures.golden_twitter_raw(spark)
         )
         scope = fixtures.golden_scope(spark)
     else:
@@ -90,36 +83,24 @@ def cmd_analyze(args) -> None:
 
 
 def cmd_ingest(args) -> None:
-    from post_processor_spark import ingest, sources
-
-    spark = _spark(args)
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    parts = []
-    if args.domain_dir:
-        raw = sources.read_domain_json(spark, args.domain_dir).withColumn(
-            "seq", F.row_number().over(Window.orderBy("url")).cast("long") - 1
-        )
-        parts.append(
-            (ingest.domain_docs_to_documents(raw), ingest.domain_docs_meta(raw))
-        )
-    if args.twitter_glob:
-        raw = sources.parse_twitter_raw(
-            sources.read_twitter_csv(spark, args.twitter_glob)
-        ).withColumn("seq", F.row_number().over(Window.orderBy("url")).cast("long") - 1)
-        parts.append(
-            (ingest.twitter_docs_to_documents(raw), ingest.twitter_docs_meta(raw))
-        )
-    if not parts:
+    from post_processor_spark import ingest, sources
+
+    if not args.domain_dir and not args.twitter_glob:
         print("nothing to ingest", file=sys.stderr)
         sys.exit(2)
-    documents = parts[0][0]
-    meta = parts[0][1]
-    for d, m in parts[1:]:
-        documents = documents.unionByName(d)
-        meta = meta.unionByName(m)
-    meta = ingest.dedupe_by_url(meta)
+    spark = _spark(args)
+    seq = F.row_number().over(Window.orderBy("url")).cast("long") - 1
+    dom_raw = twi_raw = None
+    if args.domain_dir:
+        dom_raw = sources.read_domain_json(spark, args.domain_dir).withColumn("seq", seq)
+    if args.twitter_glob:
+        twi_raw = sources.parse_twitter_raw(
+            sources.read_twitter_csv(spark, args.twitter_glob)
+        ).withColumn("seq", seq)
+    documents, meta = ingest.build_tables(dom_raw, twi_raw)
     sources.write_parquet(documents, f"{args.out}/documents.parquet")
     sources.write_parquet(meta, f"{args.out}/docs_meta.parquet")
     print(json.dumps({"documents": documents.count()}))

@@ -6,23 +6,22 @@ canonicalized+hashed URL". Reference analog: drop_duplicates on load
 (scripts/cleaner/record/clean.py:41-52) — exact, driver-memory-bound.
 
 Design:
-- exact membership = `seen` table (url_hash, host_hash, generation);
-  unseen = left_anti join on url_hash. Collision note: xxhash64 over
-  canonical URLs makes the seen set hash-keyed per the north_rule; at
-  10^10 keys the expected number of 64-bit collisions is ~3 (birthday
-  bound) — a false "seen" drops a URL, which crawl semantics tolerate.
-- bloom pre-filter = bitmaps SHARDED BY url-hash bucket (uniform by
-  construction — host-hash bucketing would concentrate a mega-host's
-  keys in one bucket, making its build task hot and its FPR balloon),
-  built distributively (applyInPandas per bucket, numpy bit-ops — no
-  driver collection), carried as a tiny DataFrame (bucket, bitmap) and
-  broadcast-joined onto candidates. Candidates whose bloom says
-  "definitely unseen" skip the exact anti-join entirely; only
-  "maybe seen" rows (true positives + FPs) hit the exact join. At
-  10^10-frontier scale each executor holds only the buckets it joins
-  (~1.2 GB per 10^9 keys at 1% FPR, split across buckets); if the total
-  bloom outgrows broadcast, the same plan degrades gracefully to a
-  co-partitioned shuffle join on bucket — no code change.
+- the `seen` table (url_hash, host_hash, generation) is the record of
+  every key ever admitted. Collision note: xxhash64 over canonical URLs
+  makes the seen set hash-keyed per the north_rule; at 10^10 keys the
+  expected number of 64-bit collisions is ~3 (birthday bound) — a false
+  "seen" drops a URL, which crawl semantics tolerate.
+- two lookup structures are derived from it, both SHARDED BY url-hash
+  bucket (uniform by construction — host-hash bucketing would
+  concentrate a mega-host's keys in one bucket, making its build task
+  hot and its FPR balloon), both built distributively (applyInPandas per
+  bucket, numpy — no driver collection at build time) and both
+  maintained as per-generation delta logs: the bloom bitmaps
+  (build_bloom / merge_bloom) and the sorted int64 exact index
+  (build_exact_index / merge_exact_index).
+- membership (filter_unseen) collects and broadcasts both and resolves
+  bloom test + exact binary search in one narrow pandas UDF. That needs
+  the bitmaps plus 8 bytes per seen key to fit in one broadcast.
 """
 
 from __future__ import annotations
@@ -113,11 +112,8 @@ def build_exact_index(seen: DataFrame, n_buckets: int = 64) -> DataFrame:
     maintained incrementally via merge_exact_index over per-generation
     deltas, never rebuilt from the full seen table per pass. Membership
     is np.searchsorted — vectorized binary search, no per-pass serial
-    hash-relation build (the Amdahl section that capped N→4N scaling of
-    the broadcast_fused pass). At 10^10 keys (80 GB) the index no longer
-    broadcasts — use the branch path + bucketed seen layout instead;
-    the bucket column means the same shards also serve a cogrouped
-    executor-side lookup without re-sharding."""
+    hash-relation build. At 10^10 keys (80 GB) the index no longer fits
+    a broadcast, and filter_unseen has no path for that size."""
 
     def agg(pdf: pd.DataFrame) -> pd.DataFrame:
         keys = np.unique(pdf["url_hash"].to_numpy(dtype=np.int64))
@@ -181,52 +177,61 @@ def _bucket_np(url_hash: np.ndarray, n_buckets: int) -> np.ndarray:
     )
 
 
-def _unseen_udf(
-    spark, bloom: DataFrame, exact_index: DataFrame, n_buckets: int,
-    bits_per_bucket: int, k: int = 5,
-):
-    """Pandas UDF (url_hash) → unseen boolean: bloom pre-filter then
-    exact searchsorted resolution of the maybe subset, all inside one
-    Arrow batch — the 'prebuilt' strategy's entire seen filter.
+def _bloom_probe(spark, bloom: DataFrame, n_buckets: int, m: int, k: int):
+    """Collect the (bucket, bitmap) rows once, broadcast them as ONE flat
+    (n_buckets * m/8) byte array, and return probe(url_hash int64 array)
+    → maybe-seen bool array for use inside a pandas UDF.
 
-    Both lookup structures are flattened at collect time so the per-batch
-    test is branch-free vectorized numpy — no per-bucket Python loop:
-    the bitmaps concatenate into one (n_buckets * m/8) byte array
-    (global bit address = bucket * m + pos, a pure gather), and the
-    exact shards union-merge into ONE globally sorted key array (the
-    bucket partitioning exists for distributed build/maintenance and the
-    10^10 cogroup path, not for the broadcast probe)."""
-    m = bits_per_bucket
+    The flat layout makes the per-batch test branch-free vectorized numpy
+    (global bit address = bucket * m + pos, a pure gather) — no
+    per-bucket Python loop."""
     bits_flat = np.zeros(n_buckets * (m // 8), dtype=np.uint8)
     for r in bloom.collect():
         b = int(r["bucket"])
         bits_flat[b * (m // 8):(b + 1) * (m // 8)] = np.frombuffer(
             r["bitmap"], dtype=np.uint8
         )
+    bc = spark.sparkContext.broadcast(bits_flat)
+
+    def probe(uh: np.ndarray) -> np.ndarray:
+        bits = bc.value
+        base = _bucket_np(uh, n_buckets) * (m // 8)
+        pos = _positions(uh.view(np.uint64), k, m)
+        hit = np.ones(len(uh), dtype=bool)
+        for i in range(k):
+            p = pos[i]
+            hit &= (
+                bits[base + (p >> 3)] & (np.uint8(1) << (p & 7).astype(np.uint8))
+            ) != 0
+        return hit
+
+    return probe
+
+
+def _unseen_udf(
+    spark, bloom: DataFrame, exact_index: DataFrame, n_buckets: int,
+    bits_per_bucket: int, k: int = 5,
+):
+    """Pandas UDF (url_hash) → unseen boolean: bloom pre-filter then
+    exact searchsorted resolution of the maybe subset, all inside one
+    Arrow batch — the whole seen filter.
+
+    The exact shards union-merge at collect time into ONE globally sorted
+    key array (the bucket partitioning exists for distributed
+    build/maintenance, not for the broadcast probe)."""
+    maybe_seen = _bloom_probe(spark, bloom, n_buckets, bits_per_bucket, k)
     shards = [
         np.frombuffer(r["keys"], dtype=np.int64) for r in exact_index.collect()
     ]
     keys_global = (
         np.sort(np.concatenate(shards)) if shards else np.zeros(0, dtype=np.int64)
     )
-    bc_b = spark.sparkContext.broadcast(bits_flat)
     bc_i = spark.sparkContext.broadcast(keys_global)
 
     @F.pandas_udf("boolean")
     def is_unseen(url_hash: pd.Series) -> pd.Series:
-        if len(url_hash) == 0:
-            return pd.Series(np.zeros(0, dtype=bool))
         uh = url_hash.to_numpy(dtype=np.int64)
-        bk = _bucket_np(uh, n_buckets)
-        bits = bc_b.value
-        base = bk * (m // 8)
-        pos = _positions(uh.view(np.uint64), k, m)
-        maybe = np.ones(len(uh), dtype=bool)
-        for i in range(k):
-            p = pos[i]
-            maybe &= (
-                bits[base + (p >> 3)] & (np.uint8(1) << (p & 7).astype(np.uint8))
-            ) != 0
+        maybe = maybe_seen(uh)
         seen_mask = np.zeros(len(uh), dtype=bool)
         if maybe.any():
             keys = bc_i.value
@@ -245,94 +250,20 @@ def bloom_filter_candidates(
     n_buckets: int = 64,
     bits_per_bucket: int = 1 << 20,
     k: int = 5,
-    mode: str = "auto",
 ) -> DataFrame:
-    """Tag candidates with maybe_seen. Two physical strategies — both keep
-    candidate ROWS out of Python (only the two hash longs ever cross the
-    Arrow channel; an earlier full-row cogroup variant was 20x slower):
-
-    - 'broadcast' (default while total bitmap bytes fit an executor):
-      bitmaps collected once + broadcast to workers; membership is a
-      scalar pandas UDF over (url_hash, bucket) — a narrow map, NO shuffle.
-    - 'cogroup' (the 10^10 path, bitmaps too big to broadcast): hash-only
-      projection cogrouped with its bucket's bitmap shard, then a JVM
-      join-back on url_hash. Each executor only ever holds the shards it
-      processes."""
-    m = bits_per_bucket
-    bucket_col = _bucket_col(n_buckets)
-
-    if mode == "auto":
-        mode = "broadcast" if n_buckets * (m // 8) <= 256 * (1 << 20) else "cogroup"
-
-    if mode == "broadcast":
-        spark = candidates.sparkSession
-        # flat concatenated bitmaps: branch-free vectorized probe (global
-        # bit address = bucket * m + pos), no per-bucket Python loop
-        bits_flat = np.zeros(n_buckets * (m // 8), dtype=np.uint8)
-        for r in bloom.collect():
-            b = int(r["bucket"])
-            bits_flat[b * (m // 8):(b + 1) * (m // 8)] = np.frombuffer(
-                r["bitmap"], dtype=np.uint8
-            )
-        bc = spark.sparkContext.broadcast(bits_flat)
-
-        @F.pandas_udf("boolean")
-        def might_contain(url_hash: pd.Series) -> pd.Series:
-            if len(url_hash) == 0:
-                return pd.Series(np.zeros(0, dtype=bool))
-            uh = url_hash.to_numpy(dtype=np.int64)
-            base = _bucket_np(uh, n_buckets) * (m // 8)
-            pos = _positions(uh.view(np.uint64), k, m)
-            bits = bc.value
-            hit = np.ones(len(uh), dtype=bool)
-            for i in range(k):
-                p = pos[i]
-                hit &= (
-                    bits[base + (p >> 3)]
-                    & (np.uint8(1) << (p & 7).astype(np.uint8))
-                ) != 0
-            return pd.Series(hit)
-
-        return candidates.withColumn(
-            "maybe_seen", might_contain(F.col("url_hash"))
-        )
-
-    # cogroup path: only (url_hash, bucket) enters Python
-    from pyspark.sql import types as T
-
-    hashes = candidates.select(
-        F.col("url_hash"), bucket_col.alias("bucket")
-    ).dropDuplicates(["url_hash"])
-
-    out_schema = T.StructType(
-        [
-            T.StructField("url_hash", T.LongType()),
-            T.StructField("maybe_seen", T.BooleanType()),
-        ]
+    """Tag candidates with maybe_seen (bloom test only, no exact
+    resolution): the bitmaps are collected once and broadcast, and
+    membership is a scalar pandas UDF over url_hash — a narrow map, no
+    shuffle; only the hash crosses the Arrow channel."""
+    maybe_seen = _bloom_probe(
+        candidates.sparkSession, bloom, n_buckets, bits_per_bucket, k
     )
 
-    def check(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty:
-            return pd.DataFrame({"url_hash": [], "maybe_seen": []})
-        if right.empty:
-            return pd.DataFrame(
-                {"url_hash": left["url_hash"], "maybe_seen": np.zeros(len(left), dtype=bool)}
-            )
-        bits = np.frombuffer(right["bitmap"].iloc[0], dtype=np.uint8)
-        uh = left["url_hash"].to_numpy(dtype=np.int64).view(np.uint64)
-        pos = _positions(uh, k, m)
-        hit = np.ones(len(left), dtype=bool)
-        for i in range(k):
-            p = pos[i]
-            hit &= (bits[p >> 3] & (np.uint8(1) << (p & 7).astype(np.uint8))) != 0
-        return pd.DataFrame({"url_hash": left["url_hash"], "maybe_seen": hit})
+    @F.pandas_udf("boolean")
+    def might_contain(url_hash: pd.Series) -> pd.Series:
+        return pd.Series(maybe_seen(url_hash.to_numpy(dtype=np.int64)))
 
-    tagged = (
-        hashes.groupby("bucket")
-        .cogroup(bloom.groupby("bucket"))
-        .applyInPandas(check, schema=out_schema)
-    )
-    return candidates.join(tagged, "url_hash", "left").fillna({"maybe_seen": False})
+    return candidates.withColumn("maybe_seen", might_contain(F.col("url_hash")))
 
 
 def filter_unseen(
@@ -341,86 +272,50 @@ def filter_unseen(
     use_bloom: bool = True,
     n_buckets: int = 64,
     bits_per_bucket: int = 1 << 20,
-    mode: str = "auto",
     materialize: bool = False,
     bloom: DataFrame | None = None,
-    exact_join: str = "branch",
     exact_index: DataFrame | None = None,
 ) -> DataFrame:
     """Rows of `candidates` whose url_hash is not in `seen`.
 
-    Bloom path: definitely-unseen rows bypass the exact join; maybe-seen
-    rows get the exact left_anti (resolves bloom false positives).
+    use_bloom=True: bloom test AND exact resolution in ONE narrow pandas
+    UDF (_unseen_udf). The exact side is the sorted int64 shard index
+    (build_exact_index / merge_exact_index); membership is vectorized
+    np.searchsorted on the bloom-maybe subset only. No join operator and
+    no per-pass hash-relation build: the pass's only non-parallel cost is
+    the bitmap + index collect and broadcast (~40 MB at a 4M-key seen
+    side). LIMIT: the bloom bitmaps (n_buckets * bits_per_bucket / 8
+    bytes) and the whole exact index (8 bytes per seen key) must fit in
+    one broadcast — driver memory for the collect and every executor's
+    memory for the broadcast copy. A 10^10-key seen set (80 GB of index)
+    does not fit.
 
-    bloom: prebuilt (bucket, bitmap) frame (e.g. the incrementally
-    maintained store table via merge_bloom). When omitted, the bloom is
-    built from the full seen table — an O(|seen|) rescan acceptable for
-    one-shot use, NOT per generation at scale.
+    bloom / exact_index: the incrementally maintained store tables
+    (merge_bloom / merge_exact_index over per-generation deltas). When
+    omitted, each is built from the full seen table — an O(|seen|)
+    rescan acceptable for one-shot use, NOT per generation at scale.
 
-    exact_join='branch' (default): two-branch union — definitely-unseen
-    rows bypass the exact join as a separate plan branch. Correct under
-    ANY join strategy, including the bucketed storage-partitioned seen
-    layout; costs one cache of the tagged frame (both branches consume
-    it).
-    exact_join='broadcast_fused': ONE streaming pass, no intermediate
-    cache — the anti-join key is NULLed for definitely-unseen rows (a
-    null key never matches a left_anti probe, so those rows survive
-    without touching the hash table) and the seen side is explicitly
-    broadcast. ONLY valid while the seen side fits a broadcast: under a
-    shuffle join every null-key row would hash to a single partition —
-    the worst possible skew — and the expression key would defeat the
-    bucketed layout's exchange-free scan. Used by the seed-list fast
-    path (frontier.schedule_seed_list).
-    exact_join='prebuilt': bloom test AND exact resolution in ONE narrow
-    pandas UDF — the exact side is the incrementally-maintained sorted
-    int64 shard index (build_exact_index / merge_exact_index), broadcast
-    as compact numpy arrays; membership is vectorized np.searchsorted on
-    the bloom-maybe subset only. NO join operator and NO per-pass serial
-    hash-relation build — the whole seen filter is a narrow map, so the
-    pass's only non-parallel cost is the bitmap+index collect/broadcast
-    (~40 MB at a 4M-key seen side). Valid while the index fits executor
-    memory (same envelope as broadcast_fused); at 10^10 keys use the
-    branch path + bucketed layout.
-    exact_join='shuffle_hash': the branch plan with a shuffle-hash hint
-    on the seen side of the maybe-resolve join — no serial broadcast
-    relation build (the broadcast build is a fixed Amdahl section that
-    caps scaling efficiency as core count grows); both sides exchange
-    and hash in parallel instead. Pick this when the seen side is large
-    enough that its broadcast build rivals the per-core pass time.
+    use_bloom=False: the plain left_anti join on url_hash — the
+    reference the bloom path is tested against.
 
-    materialize=True: persist + force the RESULT, then release the
-    intermediate cache. Use when the caller consumes the result more than
-    once (count + snapshot writes) — uncached, each consumer re-runs the
-    candidate lineage and the membership pass. Caller owns unpersist() of
-    the returned frame; the forced row count is exposed as
-    `out.materialized_count` so callers don't pay a second count job."""
-    # NOTE: no .distinct() on the seen side — left_anti semantics ignore
-    # duplicate matches, and a distinct would shuffle the full seen table
-    # (10^10 rows at target scale) before every generation's join.
-    if exact_join not in ("branch", "broadcast_fused", "shuffle_hash", "prebuilt"):
-        raise ValueError(
-            "exact_join must be 'branch', 'broadcast_fused', 'shuffle_hash'"
-            f" or 'prebuilt', got {exact_join!r}"
-        )
-    if not use_bloom:
-        out = candidates.join(seen.select("url_hash"), "url_hash", "left_anti")
-        if materialize:
-            out = out.persist()
-            out.materialized_count = out.count()
-        return out
-    if bloom is None:
-        # Ad-hoc one-shot build (callers on the per-generation path pass
-        # the incrementally-maintained store bloom instead): right-size
-        # the filter to the actual seen count rather than paying the
-        # default 10^8-key geometry (8 MB of bitmaps built, collected and
-        # broadcast) for a small table. ~10 bits/key keeps FPR ~1%; the
-        # count job is one cheap pass over a table this path only ever
-        # sees at one-shot scale.
-        cnt = seen.count()
-        total_bits = 1 << max(13, (max(cnt, 1) * 10 - 1).bit_length())
-        bits_per_bucket = min(bits_per_bucket, max(1 << 13, total_bits // n_buckets))
-        bloom = build_bloom(seen, n_buckets, bits_per_bucket)
-    if exact_join == "prebuilt":
+    materialize=True: persist + force the RESULT. Use when the caller
+    consumes the result more than once (count + snapshot writes) —
+    uncached, each consumer re-runs the candidate lineage and the
+    membership pass. Caller owns unpersist() of the returned frame; the
+    forced row count is exposed as `out.materialized_count` so callers
+    don't pay a second count job."""
+    if use_bloom:
+        if bloom is None:
+            # Ad-hoc one-shot build: right-size the filter to the actual
+            # seen count rather than paying the default 10^8-key geometry
+            # (8 MB of bitmaps built, collected and broadcast) for a small
+            # table. ~10 bits/key keeps FPR ~1%.
+            cnt = seen.count()
+            total_bits = 1 << max(13, (max(cnt, 1) * 10 - 1).bit_length())
+            bits_per_bucket = min(
+                bits_per_bucket, max(1 << 13, total_bits // n_buckets)
+            )
+            bloom = build_bloom(seen, n_buckets, bits_per_bucket)
         if exact_index is None:
             exact_index = build_exact_index(seen, n_buckets)
         out = candidates.filter(
@@ -429,44 +324,11 @@ def filter_unseen(
                 bits_per_bucket,
             )(F.col("url_hash"))
         )
-        if materialize:
-            out = out.persist()
-            out.materialized_count = out.count()
-        return out
-    if exact_join == "broadcast_fused":
-        tagged = bloom_filter_candidates(
-            candidates, bloom, n_buckets, bits_per_bucket, mode=mode
-        )
-        out = (
-            tagged.withColumn(
-                "_mk", F.when(F.col("maybe_seen"), F.col("url_hash"))
-            )
-            .join(
-                F.broadcast(seen.select(F.col("url_hash").alias("_mk"))),
-                "_mk",
-                "left_anti",
-            )
-            .drop("_mk", "maybe_seen")
-        )
-        if materialize:
-            out = out.persist()
-            out.materialized_count = out.count()
-        return out
-    # persist: both branches (definitely-unseen ∪ resolved-maybe) consume
-    # `tagged`; without a cache each union branch re-runs the candidate
-    # lineage AND the bloom check
-    tagged = bloom_filter_candidates(
-        candidates, bloom, n_buckets, bits_per_bucket, mode=mode
-    ).persist()
-    definitely_unseen = tagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    maybe = tagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-    seen_side = seen.select("url_hash")
-    if exact_join == "shuffle_hash":
-        seen_side = seen_side.hint("shuffle_hash")
-    resolved = maybe.join(seen_side, "url_hash", "left_anti")
-    out = definitely_unseen.unionByName(resolved)
+    else:
+        # no .distinct() on the seen side — left_anti ignores duplicate
+        # matches, and a distinct would shuffle the full seen table
+        out = candidates.join(seen.select("url_hash"), "url_hash", "left_anti")
     if materialize:
         out = out.persist()
         out.materialized_count = out.count()
-        tagged.unpersist()
     return out

@@ -10,6 +10,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem(ncores: int) -> str:
+    """4 GB per core (room for each task's sort buffers plus cached
+    frames), capped at 30% of the machine's MemTotal: the JVM grows its
+    heap toward -Xmx, and a heap larger than the free memory gets the
+    process killed by the kernel. The Python workers need memory of
+    their own outside the heap."""
+    with open("/proc/meminfo") as f:
+        mem_kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    return f"{max(1, min(4 * ncores, int(mem_kb / 2**20 * 0.3)))}g"
+
+
 def get_spark(
     cores: int | None = None,
     app_name: str = "post_processor_spark",
@@ -48,9 +59,11 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # local mode: the driver heap IS the cluster memory — size it for
-        # 32 concurrent task sort buffers + cached frames (box has 128 GiB)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        # local mode: the driver heap IS the cluster memory
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem(ncores),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # zstd over lz4: the shuffle-heavy frontier pass is DRAM-bandwidth

@@ -53,29 +53,19 @@ def start_frontier_stream(
             gen_now = 0
         elif batch_df.take(1):
             new_rows = frontier.seeds_to_frontier(batch_df).select(*frontier.FRONTIER_COLS)
-            seen = store.read(spark, "seen")
+            seen_state = frontier._read_seen_state(spark, store)
             unseen_new = new_rows.join(
-                seen.select("url_hash"), "url_hash", "left_anti"
+                seen_state[0].select("url_hash"), "url_hash", "left_anti"
             ).persist()
-            # frontier + seen + bloom are delta logs: merging a seed batch
+            # frontier + seen state are delta logs: merging a seed batch
             # is one atomic append of the genuinely-new rows, not a
-            # rewrite. The bloom delta keeps the incremental bitmap table
-            # consistent with seen — a missing delta would let these keys
-            # pass the bloom as definitely-unseen later.
-            from .seen import build_bloom
-
+            # rewrite. The seen write follows the layout bootstrap pinned
+            # in the manifest.
             writes = [
                 ("frontier", unseen_new.select(*frontier.FRONTIER_COLS), gen_now, "append"),
-                (
-                    "seen",
-                    unseen_new.select(
-                        "url_hash", "host_hash", F.lit(gen_now).alias("generation")
-                    ),
-                    gen_now,
-                    # follow the layout bootstrap pinned in the manifest
-                    store.table_mode("seen") or "append",
+                *frontier._seen_state_writes(
+                    unseen_new, gen_now, store.table_mode("seen"), seen_state
                 ),
-                ("bloom", build_bloom(unseen_new.select("url_hash")), gen_now, "append"),
             ]
             # merge the new seeds into the scheduler head cache too — the
             # head must see every pending row that could make a host's

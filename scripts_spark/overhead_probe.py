@@ -3,7 +3,7 @@
 Times, in one warm JVM at a given core count:
   (a) bloom collect+broadcast alone (8 MB bitmaps)
   (b) exact-side broadcast relation build alone (seen keys -> noop join)
-  (c) the full fused pass (schedule_seed_list, broadcast_fused)
+  (c) the full fused pass (schedule_seed_list: bloom + exact-index UDF)
   (d) the branch pass: bloom tag + shuffle-hash exact anti-join on the
       maybe-seen subset (no serial broadcast build)
 

@@ -4,11 +4,10 @@ Times each phase of the bench's timed region separately at local[N_LO]
 and local[N_HI] (fresh JVM each) and prints per-phase 4x-scaling
 efficiency — identifies which phase caps the end-to-end number.
 
-Phases mirror the REAL execution order of frontier.schedule_seed_list
-with exact_join='prebuilt' (the bench default): the pass persists the
-unseen frame and the politeness census materializes it, so the natural
-split is (1) canonicalize + seen filter up to the persisted unseen
-count, (2) politeness from cache. Seen-set state (table, bloom, exact
+Phases mirror the REAL execution order of frontier.schedule_seed_list:
+the pass persists the unseen frame and the politeness census
+materializes it, so the natural split is (1) canonicalize + seen filter
+up to the persisted unseen count, (2) politeness from cache. Seen-set state (table, bloom, exact
 index) is built before the timer, exactly like bench.frontier_throughput.
 
 Usage: python scripts_spark/phase_profile.py [n_urls]
@@ -55,8 +54,7 @@ def one_pass(n):
     t0 = time.time()
     cand = frontier._slim_encode(frontier.seed_candidates(seeds))
     unseen = seen_mod.filter_unseen(
-        cand, seen_tbl, use_bloom=True, bloom=bloom_df,
-        exact_join="prebuilt", exact_index=idx_df,
+        cand, seen_tbl, use_bloom=True, bloom=bloom_df, exact_index=idx_df,
     ).persist()
     unseen.count()
     out["p1_canon_seen_filter"] = time.time() - t0

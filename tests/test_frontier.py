@@ -10,14 +10,13 @@ from post_processor_spark import fixtures, frontier, seen as seen_mod
 from post_processor_spark.state import SnapshotStore
 
 
-def test_bloom_matches_exact(spark):
+def _assert_bloom_matches_exact(spark, seed, every):
     cands = frontier.canonicalize_candidates(
-        fixtures.synthetic_seed_frontier(spark, 3000, n_hosts=40, seed=1)
+        fixtures.synthetic_seed_frontier(spark, 3000, n_hosts=40, seed=seed)
         .withColumn("generation", F.lit(0))
         .withColumn("sub", F.lit(0).cast("long"))
-    )
-    # half the candidates are 'seen'
-    seen_tbl = cands.filter(F.col("seq") % 2 == 0).select(
+    ).persist()
+    seen_tbl = cands.filter(F.col("seq") % every == 0).select(
         "url_hash", "host_hash", F.lit(0).alias("generation")
     )
     exact = seen_mod.filter_unseen(cands, seen_tbl, use_bloom=False)
@@ -25,29 +24,30 @@ def test_bloom_matches_exact(spark):
     a = sorted(r["url_hash"] for r in exact.select("url_hash").collect())
     b = sorted(r["url_hash"] for r in bloom.select("url_hash").collect())
     assert a == b
-    assert len(a) == cands.filter(F.col("seq") % 2 == 1).count()
+    assert len(a) == cands.filter(F.col("seq") % every != 0).count()
+    cands.unpersist()
+
+
+def test_bloom_matches_exact(spark):
+    """The bloom + sorted-shard exact index (one narrow UDF) must select
+    exactly the rows of the plain exact anti-join with half the
+    candidates seen."""
+    _assert_bloom_matches_exact(spark, seed=1, every=2)
 
 
 def test_prebuilt_index_matches_exact(spark):
-    """The 'prebuilt' strategy (bloom + sorted-shard searchsorted in one
-    narrow UDF) must select exactly the rows of the plain exact
-    anti-join — bloom false positives resolved, no row lost."""
-    cands = frontier.canonicalize_candidates(
-        fixtures.synthetic_seed_frontier(spark, 3000, n_hosts=40, seed=7)
-        .withColumn("generation", F.lit(0))
-        .withColumn("sub", F.lit(0).cast("long"))
-    ).persist()
-    seen_tbl = cands.filter(F.col("seq") % 3 == 0).select(
-        "url_hash", "host_hash", F.lit(0).alias("generation")
-    )
-    exact = seen_mod.filter_unseen(cands, seen_tbl, use_bloom=False)
-    pre = seen_mod.filter_unseen(
-        cands, seen_tbl, use_bloom=True, n_buckets=8, exact_join="prebuilt"
-    )
-    a = sorted(r["url_hash"] for r in exact.select("url_hash").collect())
-    b = sorted(r["url_hash"] for r in pre.select("url_hash").collect())
-    assert a == b
-    cands.unpersist()
+    """Same filter, another seed and a third of the candidates seen:
+    bloom false positives are resolved by the index, no row is lost."""
+    _assert_bloom_matches_exact(spark, seed=7, every=3)
+
+
+def test_run_generation_rejects_other_exact_join(spark, tmp_path):
+    """'prebuilt' is the only seen filter; any other strategy name is an
+    error, not a silent fallback."""
+    with pytest.raises(ValueError, match="exact_join"):
+        frontier.run_generation(
+            spark, SnapshotStore(str(tmp_path)), None, 1, exact_join="branch"
+        )
 
 
 def test_merge_exact_index_unions_deltas(spark):
@@ -75,33 +75,6 @@ def test_merge_exact_index_unions_deltas(spark):
     }
     assert merged == full
     cands.unpersist()
-
-
-def test_schedule_seed_list_prebuilt_matches_branch(spark):
-    """schedule_seed_list output is strategy-invariant: the prebuilt
-    narrow-UDF seen filter must schedule the identical set (url_hash,
-    status, not_before) as the branch-path join strategies."""
-    seeds = fixtures.synthetic_seed_frontier(spark, 4000, n_hosts=30, seed=11)
-    seen_tbl = frontier.canonicalize_candidates(
-        fixtures.synthetic_seed_frontier(spark, 4000, n_hosts=30, seed=11)
-        .withColumn("generation", F.lit(0))
-        .withColumn("sub", F.lit(0).cast("long"))
-    ).filter(F.col("seq") % 5 == 0).select(
-        "url_hash", "host_hash", F.lit(0).alias("generation")
-    ).persist()
-    outs = {}
-    for strat in ("broadcast_fused", "prebuilt"):
-        out = frontier.schedule_seed_list(
-            seeds, seen_tbl, generation=1, budget_per_host=4, salt_parts=4,
-            exact_join=strat,
-        )
-        outs[strat] = sorted(
-            (r["url_hash"], r["status"], str(r["not_before"]))
-            for r in out.select("url_hash", "status", "not_before").collect()
-        )
-        spark.catalog.clearCache()
-    assert outs["broadcast_fused"] == outs["prebuilt"]
-    seen_tbl.unpersist()
 
 
 def test_merge_bloom_or_reduces_deltas(spark):
@@ -250,11 +223,11 @@ def test_politeness_slim_exchange_roundtrip(spark):
 
 def test_fused_schedule_matches_standalone(spark):
     """schedule_seed_list (one-exchange fused dedupe+politeness +
-    null-key broadcast seen join) must reproduce the standalone pipeline
-    (seeds_to_frontier dedupe → filter_unseen branch path → politeness)
-    row-for-row on a duplicate-heavy, mega-host-skewed seed list — the
-    skew_threshold is forced low so the salted branch's fused dedupe is
-    exercised too."""
+    bloom/exact-index seen filter) must reproduce the standalone pipeline
+    (seeds_to_frontier dedupe → plain anti-join seen filter →
+    politeness) row-for-row on a duplicate-heavy, mega-host-skewed seed
+    list — the skew_threshold is forced low so the salted branch's fused
+    dedupe is exercised too."""
     from post_processor_spark import seen as seen_mod
 
     base = fixtures.synthetic_seed_frontier(
@@ -274,7 +247,7 @@ def test_fused_schedule_matches_standalone(spark):
 
     old = frontier.politeness_schedule(
         seen_mod.filter_unseen(
-            frontier.seeds_to_frontier(seeds), seen_tbl, use_bloom=True
+            frontier.seeds_to_frontier(seeds), seen_tbl, use_bloom=False
         ),
         generation=1, budget_per_host=4, salt_parts=4, skew_threshold=64,
     )
@@ -368,46 +341,47 @@ def test_generations_and_resume(spark):
 
 
 @pytest.mark.slow
-def test_generation_loop_prebuilt_matches_branch(spark):
-    """run_generation with exact_join='prebuilt' must produce the same
-    per-generation scheduled/new counts and pending view as the branch
-    path, AND the store's merged exact-index delta log must equal a full
-    rebuild from the seen table (incremental maintenance is lossless)."""
+def test_generation_loop_matches_plain_anti_join(spark):
+    """The default generation loop (bloom + exact-index seen filter) must
+    produce the same per-generation scheduled/new counts and pending view
+    as the plain anti-join reference (use_bloom=False), AND the store's
+    merged exact-index delta log must equal a full rebuild from the seen
+    table (incremental maintenance is lossless)."""
     docs = fixtures.synthetic_documents(spark, 400, n_hosts=20, seed=13).persist()
     seeds = docs.select("url", F.lit(1).alias("priority"), F.col("seq")).limit(50)
 
     with tempfile.TemporaryDirectory() as d1, tempfile.TemporaryDirectory() as d2:
-        s_branch = SnapshotStore(d1)
-        branch = frontier.run_generations(
-            spark, s_branch, docs, seeds, n_generations=4, budget_per_host=4,
+        s_ref = SnapshotStore(d1)
+        ref = frontier.run_generations(
+            spark, s_ref, docs, seeds, n_generations=4, budget_per_host=4,
+            compact_every=2, use_bloom=False,
+        )
+        s_idx = SnapshotStore(d2)
+        idx = frontier.run_generations(
+            spark, s_idx, docs, seeds, n_generations=4, budget_per_host=4,
             compact_every=2,
         )
-        s_pre = SnapshotStore(d2)
-        pre = frontier.run_generations(
-            spark, s_pre, docs, seeds, n_generations=4, budget_per_host=4,
-            compact_every=2, exact_join="prebuilt",
-        )
-        assert [g.get("scheduled") for g in branch] == [
-            g.get("scheduled") for g in pre
+        assert [g.get("scheduled") for g in ref] == [
+            g.get("scheduled") for g in idx
         ]
-        assert [g.get("new") for g in branch if "new" in g] == [
-            g.get("new") for g in pre if "new" in g
+        assert [g.get("new") for g in ref if "new" in g] == [
+            g.get("new") for g in idx if "new" in g
         ]
-        pv_a = frontier.pending_view(spark, s_branch).select("url_hash")
-        pv_b = frontier.pending_view(spark, s_pre).select("url_hash")
+        pv_a = frontier.pending_view(spark, s_ref).select("url_hash")
+        pv_b = frontier.pending_view(spark, s_idx).select("url_hash")
         assert pv_a.subtract(pv_b).count() == 0
         assert pv_b.subtract(pv_a).count() == 0
 
         merged = {
             r["bucket"]: r["keys"]
             for r in seen_mod.merge_exact_index(
-                s_pre.read(spark, "exact_index")
+                s_idx.read(spark, "exact_index")
             ).collect()
         }
         full = {
             r["bucket"]: r["keys"]
             for r in seen_mod.build_exact_index(
-                s_pre.read(spark, "seen")
+                s_idx.read(spark, "seen")
             ).collect()
         }
         assert merged == full
@@ -838,7 +812,11 @@ def test_generation_job_count_constant_in_g(spark):
     an earlier one at the same loop position — an O(G) term in the loop
     (per-delta jobs, per-generation collects) would grow it."""
     def job_count():
-        return spark.sparkContext._jsc.sc().statusStore().jobsList(None).size()
+        # job ids are sequential and the newest job is never evicted from
+        # the status store (spark.ui.retainedJobs drops the OLDEST), so
+        # the latest id counts jobs exactly even deep into a long session
+        # — a size of the retained list shrinks when eviction kicks in
+        return max(spark.sparkContext.statusTracker().getJobIdsForGroup(), default=-1)
 
     docs = fixtures.synthetic_documents(spark, 800, n_hosts=40, seed=13).persist()
     seeds = docs.select("url", F.lit(1).alias("priority"), F.col("seq")).limit(80)
@@ -846,14 +824,14 @@ def test_generation_job_count_constant_in_g(spark):
         store = SnapshotStore(d)
         frontier.run_generations(
             spark, store, docs, seeds, n_generations=4, budget_per_host=4,
-            compact_every=4, use_bloom=True, exact_join="prebuilt",
+            compact_every=4, use_bloom=True,
         )
         counts = []
         for g in (5, 6):
             j0 = job_count()
             frontier.run_generation(
                 spark, store, docs, g, budget_per_host=4, compact_every=4,
-                use_bloom=True, exact_join="prebuilt",
+                use_bloom=True,
             )
             counts.append(job_count() - j0)
         assert counts[1] <= counts[0], counts

@@ -203,3 +203,37 @@ def test_matches_python_oracle(pipeline_result):
             "associated_publisher", "tags", "name",
         ):
             assert got[k] == exp[k], f"{by_id[doc_id]} field {k}: {got[k]!r} != {exp[k]!r}"
+
+
+def test_recrawled_url_is_ingested_once(spark):
+    """A URL crawled twice (same url, later seq) must leave ONE documents
+    row under its uuid5 doc_id, and run_pipeline must report each of its
+    citations and referrals once — the output equals the single-crawl
+    output row for row."""
+    from pyspark.sql import functions as F
+
+    dom = fixtures.golden_domain_raw(spark)
+    twi = fixtures.golden_twitter_raw(spark)
+    # re-crawls of the article and of tweet1 (it cites second_url)
+    dom2 = dom.unionByName(dom.withColumn("seq", F.col("seq") + 100))
+    twi2 = twi.unionByName(
+        twi.filter(F.col("url") == URL_T1).withColumn("seq", F.col("seq") + 100)
+    )
+    scope = fixtures.golden_scope(spark)
+    documents, meta = ingest.build_tables(dom2, twi2)
+    for url in (URL_ART, URL_T1):
+        assert documents.filter(F.col("doc_id") == _uuid5(url)).count() == 1
+        assert meta.filter(F.col("url") == url).count() == 1
+    cols = [
+        "url", "citation_url_or_text_alias", "citation_name", "anchor_text",
+        "found_aliases", "referring_name", "number_of_referrals",
+    ]
+
+    def rows(docs, m):
+        out = citations.run_pipeline(docs, m, scope, scope)
+        return sorted(tuple(r[c] for c in cols) for r in out.select(*cols).collect())
+
+    got = rows(documents, meta)
+    assert got == rows(*ingest.build_tables(dom, twi))
+    by_url = {r[0]: r for r in got}
+    assert by_url[URL_T1][1] == ["https://www.aljazeera.com/second_url"]

@@ -167,8 +167,10 @@ def test_metrics_window_groups_by_generation_epoch(spark):
 def test_streaming_frontier_bucketed_seed_merge(spark, tmp_path):
     """The seed-merge write path must follow the store's seen layout: on a
     bucketed store a hard-coded 'append' seen write raises mode-mismatch
-    and kills the stream."""
-    from post_processor_spark import fixtures, streaming
+    and kills the stream. It must also add the merged seeds to the exact
+    index: a seen key missing from the index passes the bloom as
+    maybe-seen, misses the index and is rediscovered as new."""
+    from post_processor_spark import fixtures, seen, streaming
     from post_processor_spark.state import SnapshotStore
 
     docs = fixtures.synthetic_documents(spark, 100, n_hosts=10, seed=5)
@@ -203,6 +205,15 @@ def test_streaming_frontier_bucketed_seed_merge(spark, tmp_path):
     assert q2.exception() is None
     assert store.current_generation("frontier") > g1
     assert store.read(spark, "seen").count() > 0
+    merged = {
+        r["bucket"]: r["keys"]
+        for r in seen.merge_exact_index(store.read(spark, "exact_index")).collect()
+    }
+    full = {
+        r["bucket"]: r["keys"]
+        for r in seen.build_exact_index(store.read(spark, "seen")).collect()
+    }
+    assert merged == full
 
 
 def test_streaming_url_dedup_within_watermark(spark, tmp_path):
